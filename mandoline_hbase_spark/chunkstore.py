@@ -4,6 +4,12 @@ Re-expresses ``proto/ChunkStore`` of the reference
 (src/io/mandoline/backend/hbase.clj:122-172):
 
 - ``read_chunk(hash) -> bytes``      (hbase.clj:124-133; raises if absent)
+- ``prefetch(hashes)``               the batched form of that point get:
+  one pushed-down scan fetches every payload a store operation needs,
+  and ``read_chunk`` serves them from the handle. The reference opens a
+  fresh table handle per get with no batch reuse (SURVEY.md §3, "a
+  known inefficiency to *not* replicate"); a handle lives for one
+  operation, so nothing is cached across operations.
 - ``chunk_refs(hash) -> int``        (hbase.clj:135-136, 105-120)
 - ``write_chunk(hash, ref, data)``   (hbase.clj:138-154; idempotent blind
   put — content addressing makes last-write-wins safe)
@@ -35,12 +41,36 @@ def _validate_hash(hash_: str) -> None:
 class ChunkStore:
     def __init__(self, chunks_dir: str):
         self._dir = chunks_dir
+        self._prefetched: dict[str, bytes] = {}
 
     # -- reads ------------------------------------------------------------
 
+    def prefetch(self, hashes) -> None:
+        """Fetch the payloads of ``hashes`` (``None`` entries skipped) with
+        ONE pushed-down scan, for ``read_chunk`` to serve from this handle.
+
+        Exact by content addressing: a hash always names the same bytes.
+        Ids without a payload row are simply not held, so ``read_chunk``
+        falls back to its point get and raises there as before.
+        """
+        ids = list({h for h in hashes if h is not None})
+        if not ids:
+            return
+        t = storage.scan(
+            self._dir,
+            storage.CHUNKS_SCHEMA,
+            filter=pc.field("chunk_id").isin(ids) & pc.field("data").is_valid(),
+            columns=["chunk_id", "data"],
+        )
+        self._prefetched.update(zip(t.column("chunk_id").to_pylist(), t.column("data").to_pylist()))
+
     def read_chunk(self, hash_: str) -> bytes:
-        """Point get of the chunk payload; raises ChunkNotFoundError if absent."""
+        """Point get of the chunk payload (served from this handle when
+        prefetched); raises ChunkNotFoundError if absent."""
         _validate_hash(hash_)
+        data = self._prefetched.get(hash_)
+        if data is not None:
+            return data
         t = storage.scan(
             self._dir,
             storage.CHUNKS_SCHEMA,

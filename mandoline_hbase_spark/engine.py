@@ -761,10 +761,7 @@ class Connection:
         # Base-state read happens under the dataset lock so concurrent
         # overlapping slab writers serialize (read-your-predecessor), the
         # guarantee the reference gets from per-key CAS + caller retry.
-        latest = self.latest_version_id()
-        if latest is None:
-            raise VersionNotFoundError(f"dataset {self.dataset_name} has no versions")
-        meta = self.metadata(latest)
+        latest, meta, committed = self._snapshot(None)
         var_meta = meta.get("variables", {}).get(var_name)
         if var_meta is None:
             raise KeyError(f"variable {var_name} is not defined; create_variable first")
@@ -787,8 +784,9 @@ class Connection:
         # chunk coords intersecting the region
         lo_chunk = tuple(lo // cs for lo, cs in zip(region_lo, chunk_shape))
         hi_chunk = tuple((hi - 1) // cs for hi, cs in zip(region_hi, chunk_shape))
-        base_map = self.resolve_chunk_map(var_name, latest)
+        base_map = self.resolve_chunk_map(var_name, latest, committed=committed)
         store = self.chunk_store()
+        store.prefetch(base_map.get(codec.coordinate_to_id(c)) for c in _iter_box(lo_chunk, hi_chunk))
 
         entries: list[tuple[tuple[int, ...], str]] = []
         blobs: dict[str, bytes] = {}
@@ -823,29 +821,27 @@ class Connection:
             version_id,
         )
 
-    def _resolve_read(self, var_name: str, version: int | None):
-        bound = int(version) if version is not None else self.latest_version_id()
-        if bound is None:
+    def _snapshot(self, version: int | None) -> tuple[int, dict, list[int]]:
+        """``(bound, metadata, committed ids <= bound)`` from ONE listing
+        of the versions log: the snapshot bound (latest if ``version`` is
+        None), the latest committed metadata at or before it, and the
+        visibility set ``resolve_chunk_map`` filters index rows by."""
+        rows = self._version_rows()
+        if version is None and not rows:
             raise VersionNotFoundError(f"dataset {self.dataset_name} has no versions")
-        meta = self.metadata_at_or_before(bound)
+        bound = int(version) if version is not None else int(rows[0]["version_id"])
+        visible = [r for r in rows if r["version_id"] <= bound]
+        if not visible:
+            raise VersionNotFoundError(f"no version <= {bound} in {self.dataset_name}")
+        return bound, json.loads(visible[0]["metadata"]), [int(r["version_id"]) for r in visible]
+
+    def _resolve_read(self, var_name: str, version: int | None):
+        """``(bound, var_meta, committed)`` of a snapshot read."""
+        bound, meta, committed = self._snapshot(version)
         var_meta = meta.get("variables", {}).get(var_name)
         if var_meta is None:
             raise KeyError(f"variable {var_name} not defined at version {bound}")
-        return bound, meta, var_meta
-
-    def metadata_at_or_before(self, bound: int) -> dict:
-        """Latest committed metadata with version_id <= bound (snapshot read)."""
-        t = storage.scan(
-            self._dirs["versions"],
-            storage.VERSIONS_SCHEMA,
-            filter=pc.field("version_id") <= int(bound),
-            columns=["version_id", "metadata"],
-        )
-        if t.num_rows == 0:
-            raise VersionNotFoundError(f"no version <= {bound} in {self.dataset_name}")
-        rows = t.to_pylist()
-        best = max(rows, key=lambda r: r["version_id"])
-        return json.loads(best["metadata"])
+        return bound, var_meta, committed
 
     def _committed_versions_le(self, bound: int) -> list[int]:
         """Committed version ids <= bound — the visibility set for reads.
@@ -859,7 +855,11 @@ class Connection:
         return [int(v["version"]) for v in self.versions() if int(v["version"]) <= int(bound)]
 
     def resolve_chunk_map(
-        self, var_name: str, bound: int, coord_ids: Optional[list[str]] = None
+        self,
+        var_name: str,
+        bound: int,
+        coord_ids: Optional[list[str]] = None,
+        committed: Optional[list[int]] = None,
     ) -> dict[str, str]:
         """Bulk find-index: {coord_id -> chunk_id} at snapshot ``bound``.
 
@@ -869,11 +869,12 @@ class Connection:
         narrows the scan to a coordinate subset — the analog of the
         reference's bounded start/stop-row scan (hbase.clj:191-192),
         pushed to the parquet reader as an isin filter. Only entries of
-        COMMITTED versions participate (see _committed_versions_le).
+        COMMITTED versions participate (see _committed_versions_le);
+        ``committed`` passes that set when the caller already listed it.
         """
-        flt = (pc.field("var_name") == var_name) & (
-            pc.field("version_id").isin(self._committed_versions_le(bound))
-        )
+        if committed is None:
+            committed = self._committed_versions_le(bound)
+        flt = (pc.field("var_name") == var_name) & pc.field("version_id").isin(committed)
         if coord_ids is not None:
             flt = flt & pc.field("coord_id").isin(coord_ids)
         t = storage.scan(
@@ -896,7 +897,7 @@ class Connection:
 
     def read_variable(self, var_name: str, version: int | None = None) -> np.ndarray:
         """Assemble the variable at a snapshot version (latest if None)."""
-        bound, meta, var_meta = self._resolve_read(var_name, version)
+        bound, var_meta, committed = self._resolve_read(var_name, version)
         dtype = var_meta["dtype"]
         shape = tuple(var_meta["shape"])
         chunk_shape = tuple(var_meta["chunk_shape"])
@@ -904,7 +905,7 @@ class Connection:
         if fill is None:
             fill = codec.default_fill(dtype)
 
-        chunk_map = self.resolve_chunk_map(var_name, bound)
+        chunk_map = self.resolve_chunk_map(var_name, bound, committed=committed)
         if len(shape) == 0:
             h = chunk_map.get("_")
             if h is None:
@@ -916,6 +917,7 @@ class Connection:
         padded_shape = tuple(g * c for g, c in zip(grid, chunk_shape))
         out = np.full(padded_shape, fill, dtype=dtype)
         store = self.chunk_store()
+        store.prefetch(chunk_map.values())
         for coord in codec.iter_chunk_coords(shape, chunk_shape):
             cid = codec.coordinate_to_id(coord)
             h = chunk_map.get(cid)
@@ -936,13 +938,14 @@ class Connection:
 
         The read-side mirror of writing slabs: only the chunk coordinates
         overlapping the region are resolved (coord-pruned index scan, see
-        ``resolve_chunk_map``) and fetched. A 1-chunk read of a
-        million-chunk variable does O(1) chunk IO, matching the
-        reference's bounded scan + point get (hbase.clj:184-198, 97-103).
+        ``resolve_chunk_map``) and fetched. A read of a million-chunk
+        variable does one chunk-log scan for the whole region
+        (``ChunkStore.prefetch``), the batched form of the reference's
+        bounded scan + per-chunk point get (hbase.clj:184-198, 97-103).
         """
         import itertools
 
-        bound, meta, var_meta = self._resolve_read(var_name, version)
+        bound, var_meta, committed = self._resolve_read(var_name, version)
         dtype = var_meta["dtype"]
         shape = tuple(var_meta["shape"])
         chunk_shape = tuple(var_meta["chunk_shape"])
@@ -968,12 +971,16 @@ class Connection:
         ]
         coords = [tuple(c) for c in itertools.product(*chunk_ranges)]
         chunk_map = self.resolve_chunk_map(
-            var_name, bound, coord_ids=[codec.coordinate_to_id(c) for c in coords]
+            var_name,
+            bound,
+            coord_ids=[codec.coordinate_to_id(c) for c in coords],
+            committed=committed,
         )
 
         out_shape = tuple(stop - start for start, stop in region)
         out = np.full(out_shape, fill, dtype=dtype)
         store = self.chunk_store()
+        store.prefetch(chunk_map.values())
         for coord in coords:
             h = chunk_map.get(codec.coordinate_to_id(coord))
             if h is None:
@@ -1063,7 +1070,7 @@ class Connection:
         from pyspark.sql import functions as F
 
         spark = spark or self.spark
-        bound, meta, var_meta = self._resolve_read(var_name, version)
+        bound, var_meta, _ = self._resolve_read(var_name, version)
         dtype = var_meta["dtype"]
         shape = tuple(var_meta["shape"])
         chunk_shape = tuple(var_meta["chunk_shape"])

@@ -129,12 +129,12 @@ def _compacted_chunks_df(conn, spark):
 def _cluster_by_chunk_id(df, spark):
     """Range-cluster a chunks rewrite by ``chunk_id``.
 
-    Every point fetch (ChunkStore.read_chunk, the datasource's
-    ``_read_payloads``) filters on chunk_id; writing the rewrite as
-    disjoint sorted id ranges turns those scans into one-file reads via
-    parquet min/max stats — the same scan-key clustering the retention
-    rewrite applies to the index log. Hash ids are uniform, so ranges
-    balance without sampling skew.
+    Every point fetch (ChunkStore.read_chunk, its batched form
+    ChunkStore.prefetch, the datasource's ``_read_payloads``) filters on
+    chunk_id; writing the rewrite as disjoint sorted id ranges turns a
+    point fetch into a one-file read via parquet min/max stats — the
+    same scan-key clustering the retention rewrite applies to the index
+    log. Hash ids are uniform, so ranges balance without sampling skew.
     """
     n = max(2, spark.sparkContext.defaultParallelism)
     return df.repartitionByRange(n, "chunk_id").sortWithinPartitions("chunk_id")

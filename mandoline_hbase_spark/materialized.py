@@ -122,7 +122,7 @@ class IncrementalVarStats:
         re-decoded (the delta size)."""
         conn = self.conn
         spark = self.spark
-        bound, _meta, var_meta = conn._resolve_read(self.var_name, version)
+        bound, var_meta, _ = conn._resolve_read(self.var_name, version)
         if len(var_meta["shape"]) == 0:
             raise InvalidArgumentError("scalar variables have no chunk grid to materialize")
         last = self.watermark()

@@ -292,16 +292,17 @@ def read_ingested_events(connection, spark: SparkSession, version: int | None = 
     """Read back every batch committed at or before `version` as one DataFrame.
 
     Resolves chunk ids through the index (latest-<=-version semantics,
-    find-index hbase.clj:184-198), fetches chunks, decodes the parquet
-    payloads. Chunk decode is distributed via the chunk table + a
-    mapInPandas decode when run at scale; here batches are driver-decoded
-    because each is one payload row.
+    find-index hbase.clj:184-198), fetches every batch's chunk with one
+    chunk-log scan, decodes the parquet payloads. Chunk decode is
+    distributed via the chunk table + a mapInPandas decode when run at
+    scale; here batches are driver-decoded because each is one payload row.
     """
     bound = version if version is not None else connection.latest_version_id()
     if bound is None:
         return spark.createDataFrame([], EVENTS_SCHEMA)
     chunk_map = connection.resolve_chunk_map("events", bound)
     cs = connection.chunk_store()
+    cs.prefetch(chunk_map.values())
     frames = [
         pd.read_parquet(io.BytesIO(cs.read_chunk(chunk_id)))
         for _, chunk_id in sorted(chunk_map.items())

@@ -132,7 +132,8 @@ def test_running_user_totals_stateful(spark, event_slices):
     assert (merged.total_value - merged.total_value_exp).abs().max() < 1e-9
 
 
-def test_versioned_ingest_commits_one_version_per_batch(spark, event_slices, tmp_path):
+def test_versioned_ingest_commits_one_version_per_batch(spark, event_slices, tmp_path, monkeypatch):
+    from mandoline_hbase_spark import storage
     from mandoline_hbase_spark.engine import mk_schema
     from mandoline_hbase_spark.streaming.ingest import (
         read_events_stream,
@@ -153,7 +154,19 @@ def test_versioned_ingest_commits_one_version_per_batch(spark, event_slices, tmp
     versions = conn.versions()
     assert len(versions) == 3  # one commit per micro-batch (3 files)
 
+    # the read-back fetches every committed batch chunk with ONE chunk-log scan
+    chunk_scans = []
+    orig_scan = storage.scan
+
+    def counting_scan(table_dir, *args, **kwargs):
+        if table_dir == os.path.join(conn.dataset_dir, "chunks"):
+            chunk_scans.append(table_dir)
+        return orig_scan(table_dir, *args, **kwargs)
+
+    monkeypatch.setattr(storage, "scan", counting_scan)
+    assert len(conn.resolve_chunk_map("events", conn.latest_version_id())) >= 3
     all_back = read_ingested_events(conn, spark).toPandas()
+    assert len(chunk_scans) == 1
     assert len(all_back) == len(pdf)
     assert sorted(all_back.event_id) == sorted(pdf.event_id)
 
